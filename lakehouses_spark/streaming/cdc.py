@@ -2,7 +2,16 @@
 continuously-maintained current-state table, composed from the engine's own
 pieces (the streaming sibling of the batch `lake_cdc_apply` query):
 
-    laketable stream source (change feed, log-tail offsets)
+    Spark's native file stream over the source table's commit files
+    (<table>/_tx_log/NNNNNNNNNN.json: the log IS the changelog; the
+    stream's offset is the set of commit files seen, tracked exactly-once
+    by the file source, with no Python process)
+      → driver-side planning from those commits (plan_batch_files, the
+        rules the `laketable` stream source applies too): batch 0 reads
+        the snapshot at its highest version, later batches the files
+        added by exactly their commits; a commit that removes or
+        tombstones rows fails the stream (ignoreChanges message)
+      → a native parquet read of the planned files (LakeTable._snapshot)
       → per-micro-batch LAST-change collapse per key (one window over the
         batch — batch-sized, never table-sized)
       → ONE conditional MERGE into the state LakeTable (r13): keys whose
@@ -12,17 +21,33 @@ pieces (the streaming sibling of the batch `lake_cdc_apply` query):
       → (app_id, batch_id) idempotency guard, riding the MERGE commit
         itself → exactly-once across restarts and replayed micro-batches
 
-Sequencing contract: micro-batches arrive in FEED ORDER (the laketable
-source replays commits in log order), so within-batch collapse plus
-latest-batch-wins merging equals global last-writer-wins — the same
-assumption DLT's APPLY CHANGES makes of its source. An out-of-order feed
-would need a sequence-guarded merge (only overwrite when s.seq ≥ t.seq);
-that variant trades one extra predicate in the join condition, not a
-different plan shape.
+Why not the `laketable` Python data source: each stream start spawns a
+Python planner worker that imports pyspark from a zip without bytecode
+(~1.4 s), and every row crosses Arrow through Python workers. The stateful
+`start_rollup_view` still pays that runner per start — its watermarked
+aggregation needs a row stream, which the commit-file stream is not.
 
-At 100 TB every stage is bounded: source partitions per added file, the
-collapse window runs on the micro-batch only, and each MERGE rewrites just
-the files containing touched keys (stats-pruned, bounded collect).
+Checkpoint compatibility: a checkpoint written by the earlier Python-source
+drain (offsets ``{"version": N}``) cannot resume this stream — Spark fails
+the query on start (``No usable value for logOffset``) before any batch
+runs, so nothing is committed to the state table. A fresh checkpoint alone
+is not a migration either: its batch ids restart at 0, and the (app_id,
+batch_id) guard would skip every batch id the old drain already applied.
+Drop the checkpoint AND the state table; batch 0 then rebuilds the state
+from the source snapshot.
+
+Sequencing contract: micro-batches arrive in FEED ORDER (a later batch only
+ever holds later commits), so within-batch collapse plus latest-batch-wins
+merging equals global last-writer-wins — the same assumption DLT's APPLY
+CHANGES makes of its source. An out-of-order feed would need a
+sequence-guarded merge (only overwrite when s.seq ≥ t.seq); that variant
+trades one extra predicate in the join condition, not a different plan
+shape.
+
+At 100 TB every stage is bounded: one collect of the trigger's commit
+versions, source partitions per added file, the collapse window runs on
+the micro-batch only, and each MERGE rewrites just the files containing
+touched keys (stats-pruned, bounded collect).
 Reference analog: the continuous upsert step of the medallion silver layer
 (notebooks/04.delta_lake/02.delta_lake_primer.py:312-320 MERGE, driven by
 the incremental ingestion loop of 02.ingestas_ficheros/03.ingesta_
@@ -40,7 +65,7 @@ from pyspark.sql.types import StructType
 
 from lakehouses_spark.tables import LakeTable
 from lakehouses_spark.tables import log as txlog
-from lakehouses_spark.tables.stream_source import LakeTableDataSource
+from lakehouses_spark.tables.stream_source import plan_batch_files
 
 
 def start_apply_changes(
@@ -55,39 +80,40 @@ def start_apply_changes(
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Start (or resume) the APPLY CHANGES stream. Returns the query."""
-    spark.dataSource.register(LakeTableDataSource)
+    source = LakeTable(spark, source_table)
     state_path = Path(state_path)
     app_id = f"apply_changes:{state_path.name}"
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in seq_cols])
 
-    # supply the source schema from the transaction log (driver-side file
-    # read) so Spark skips the planner-worker schema() round trip the
-    # Python data source otherwise pays per stream start (r13)
-    stream = (
-        spark.readStream.format("laketable")
-        .schema(LakeTable(spark, source_table).schema())
-        .option("path", str(source_table))
-        .load()
+    # the stream is the source's commit files themselves: the glob admits
+    # NNNNNNNNNN.json only (checkpoint-*.json fails it, in-flight .tmp-*
+    # files are hidden, and try_commit publishes a commit by one os.link)
+    commits = (
+        spark.readStream.schema("version LONG")
+        .option("pathGlobFilter", "[0-9]*.json")
+        .json(str(txlog.log_dir(source.path)))
     )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
+        state = LakeTable(spark, state_path)
+        if batch_id <= state.last_txn_version(app_id):
+            # replayed micro-batch: already applied. The file source keeps
+            # no state a skipped batch must advance, so nothing is read.
+            return
+        # one job over this trigger's commit files (bounded by commits per
+        # trigger, not by rows); the data files are planned from the log
+        versions = [r.version for r in batch_df.collect()]
+        rels = plan_batch_files(source.path, versions, snapshot=batch_id == 0)
+        st = txlog.replay(source.path, version=max(versions))
+        changes = source._snapshot(st, [str(source.path / rel) for rel in rels])
         if not txlog.list_versions(state_path):
-            # build the empty state table from a driver-side frame (r13):
-            # limit(0) over batch_df would still plan+run a job through the
-            # Python stream source just to write zero rows
-            by_name = {f.name: f for f in batch_df.schema.fields}
+            by_name = {f.name: f for f in changes.schema.fields}
             fields = [by_name[c] for c in (*keys, *carry_cols)]
             LakeTable.create(
                 spark, state_path,
                 spark.createDataFrame([], StructType(fields)),
             )
-        t = LakeTable(spark, state_path)
-        if batch_id <= t.last_txn_version(app_id):
-            # replayed micro-batch: already applied — consume and skip (see
-            # materialized.py::upsert for why the batch must still run)
-            batch_df.count()
-            return
         # ONE conditional MERGE per micro-batch (r13): the terminal row set
         # carries a precomputed delete flag; keys whose terminal op matches
         # ``delete_when`` delete, the rest update-or-insert. One affected-
@@ -96,15 +122,22 @@ def start_apply_changes(
         # and the (app_id, batch_id) stamp rides the MERGE commit, so the
         # exactly-once replay guard is unchanged.
         terminal = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
+            changes.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .drop("__rn")
             .withColumn("__del", F.expr(delete_when))
             .select(*keys, *carry_cols, "__del")
             .localCheckpoint()  # one collapse job; the merge legs reuse it
         )
-        t.merge(
-            terminal,
+        # shuffle joins: the collapsed batch is small enough to broadcast,
+        # and a broadcast join rewrites each affected file on its own, so
+        # the state table would gain a file per batch; a shuffle lets AQE
+        # fold the rewrite into few files. Hash, not sort-merge: no sort
+        # stages and half the generated classes — with sort-merge the
+        # drain's classes overflowed Spark's codegen cache in some runs and
+        # were recompiled every micro-batch
+        state.merge(
+            terminal.hint("shuffle_hash"),
             on,
             when_matched_update="all",
             when_not_matched_insert="all",
@@ -118,7 +151,7 @@ def start_apply_changes(
         )
 
     return (
-        stream.writeStream.foreachBatch(apply)
+        commits.writeStream.foreachBatch(apply)
         .option("checkpointLocation", str(checkpoint))
         .trigger(**(trigger or {"availableNow": True}))
         .start()

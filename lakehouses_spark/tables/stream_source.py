@@ -5,7 +5,9 @@ stream source", 02.delta_lake_primer.py:133-137).
 Offsets are log versions; each micro-batch is exactly the set of files added
 by commits in (start_version, end_version]. That is Delta's streaming-source
 design: the log IS the changelog, so no directory diffing and no state
-beyond one integer.
+beyond one integer. Which files a batch reads is decided driver-side by
+`plan_batch_files`, which the commit-file drain of streaming/cdc.py (a
+native Spark file stream, no Python process) plans with too.
 
 Scaling structure: `partitions()` emits one InputPartition per added file —
 the read side fans out across executors, each opening its own parquet file
@@ -78,6 +80,53 @@ def _versions(table_path: str) -> list[int]:
 
 def _commit(table_path: str, v: int) -> dict:
     return _txlog().read_commit(table_path, v)
+
+
+def plan_batch_files(
+    table_path: str | Path,
+    versions: list[int],
+    snapshot: bool,
+    ignore_changes: bool = False,
+) -> list[str]:
+    """The table-relative data files one micro-batch of a stream over a
+    LakeTable reads. Driver-side, log-only; both stream paths plan with it
+    (`LakeTableStreamReader` and the commit-file drain of
+    streaming/cdc.py), so their rules cannot drift apart.
+
+    ``snapshot=True`` (a stream's initial batch): the live files of the
+    snapshot at ``max(versions)`` — DML in history streams cleanly, but
+    live merge-on-read tombstones fail, since a whole-file read would
+    resurrect the deleted rows. Otherwise the files added by exactly the
+    commits ``versions``; a commit that removes files or tombstones rows
+    breaks the append-only contract and fails. ``ignore_changes`` lifts
+    both checks (Delta-source semantics)."""
+    if snapshot:
+        st = _replay(str(table_path), version=max(versions))
+        if st.tombstones and not ignore_changes:
+            raise RuntimeError(
+                f"{len(st.tombstones)} active merge-on-read "
+                "tombstone(s); the stream source reads whole files — "
+                "set .option('ignoreChanges', 'true') to stream them "
+                "including deleted rows, or materialize_tombstones() "
+                "first"
+            )
+        return list(st.files)
+    out: list[str] = []
+    for v in sorted(versions):
+        c = _commit(str(table_path), v)
+        breaking = (
+            c.get("remove") or c.get("tombstone")
+            or c.get("set_tombstones") is not None
+        )
+        if breaking and not ignore_changes:
+            raise RuntimeError(
+                f"commit {v} ({c.get('operation')}) removed or deleted "
+                "rows on the streamed table; set .option("
+                "'ignoreChanges', 'true') to stream only appended files "
+                "(Delta-source semantics)"
+            )
+        out.extend(a["path"] for a in c.get("add") or [])
+    return out
 
 
 class LakeTableDataSource(DataSource):
@@ -196,45 +245,17 @@ class LakeTableStreamReader(DataSourceStreamReader):
         versions = _versions(self.table_path)
         return {"version": versions[-1] if versions else -1}
 
-    def _added_files(self, start_v: int, end_v: int) -> list[str]:
-        out: list[str] = []
-        for v in _versions(self.table_path):
-            if not (start_v < v <= end_v):
-                continue
-            c = _commit(self.table_path, v)
-            breaking = (
-                c.get("remove") or c.get("tombstone")
-                or c.get("set_tombstones") is not None
-            )
-            if breaking and not self.ignore_changes:
-                raise RuntimeError(
-                    f"commit {v} ({c.get('operation')}) removed or deleted "
-                    "rows on the streamed table; set .option("
-                    "'ignoreChanges', 'true') to stream only appended files "
-                    "(Delta-source semantics)"
-                )
-            out.extend(a["path"] for a in c.get("add") or [])
-        return out
-
     def partitions(self, start: dict, end: dict):
         start_v, end_v = int(start["version"]), int(end["version"])
         if start_v == -1 and self.starting_version is None:
-            # INITIAL batch = the CURRENT snapshot at end_v; the tail
-            # below then only sees versions > end_v
-            st = _replay(self.table_path, version=end_v)
-            if st.tombstones and not self.ignore_changes:
-                raise RuntimeError(
-                    f"{len(st.tombstones)} active merge-on-read "
-                    "tombstone(s); the stream source reads whole files — "
-                    "set .option('ignoreChanges', 'true') to stream them "
-                    "including deleted rows, or materialize_tombstones() "
-                    "first"
-                )
-            return [
-                FileSlice(str(Path(self.table_path) / rel))
-                for rel in st.files
-            ] or [FileSlice("")]
-        rels = self._added_files(start_v, end_v)
+            # INITIAL batch = the CURRENT snapshot at end_v; the tail then
+            # only sees versions > end_v
+            rels = plan_batch_files(self.table_path, [end_v], snapshot=True,
+                                    ignore_changes=self.ignore_changes)
+        else:
+            tail = [v for v in _versions(self.table_path) if start_v < v <= end_v]
+            rels = plan_batch_files(self.table_path, tail, snapshot=False,
+                                    ignore_changes=self.ignore_changes)
         return [FileSlice(str(Path(self.table_path) / rel)) for rel in rels] or [
             FileSlice("")
         ]
