@@ -19,7 +19,11 @@ pieces (the streaming sibling of the batch `lake_cdc_apply` query):
         WHEN MATCHED AND <del> THEN DELETE clause, the rest update-or-insert
         — one affected-file scan / write / commit per batch
       → (app_id, batch_id) idempotency guard, riding the MERGE commit
-        itself → exactly-once across restarts and replayed micro-batches
+        itself → exactly-once across restarts and replayed micro-batches;
+        beside it the highest source version the batch consumed, so a later
+        batch whose first commit is not the next version (its predecessors
+        deleted by ``cleanup_log`` before the stream read them) fails with
+        a data-loss error before any write, like Delta's failOnDataLoss
 
 Why not the `laketable` Python data source: each stream start spawns a
 Python planner worker that imports pyspark from a zip without bytecode
@@ -97,13 +101,26 @@ def start_apply_changes(
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         state = LakeTable(spark, state_path)
-        if batch_id <= state.last_txn_version(app_id):
+        last = state.last_txn(app_id)
+        if batch_id <= int(last.get("txn_version", -1)):
             # replayed micro-batch: already applied. The file source keeps
             # no state a skipped batch must advance, so nothing is read.
             return
         # one job over this trigger's commit files (bounded by commits per
         # trigger, not by rows); the data files are planned from the log
         versions = [r.version for r in batch_df.collect()]
+        consumed = last.get("txn_source_version")
+        if consumed is not None and min(versions) != consumed + 1:
+            # the commits in between were deleted (cleanup_log) before the
+            # stream read them: fail before any write, like Delta's
+            # failOnDataLoss, instead of silently skipping their changes
+            raise RuntimeError(
+                f"data loss: this batch starts at source version "
+                f"{min(versions)}, but the stream last consumed version "
+                f"{consumed}; the commits in between were removed before it "
+                "read them. Drop the checkpoint and the state table to "
+                "rebuild the state from the source snapshot"
+            )
         rels = plan_batch_files(source.path, versions, snapshot=batch_id == 0)
         st = txlog.replay(source.path, version=max(versions))
         changes = source._snapshot(st, [str(source.path / rel) for rel in rels])
@@ -145,6 +162,7 @@ def start_apply_changes(
             when_not_matched_insert_condition="NOT __del",
             txn_app=app_id,
             txn_version=batch_id,
+            txn_source_version=max(versions),
             # uniqueness is structural: terminal is the row_number()=1
             # collapse keyed on exactly the merge keys
             source_unique_on_key=True,

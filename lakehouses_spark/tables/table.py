@@ -42,6 +42,11 @@ from pyspark.sql.types import (
 )
 
 from lakehouses_spark.tables import log as txlog
+from lakehouses_spark.tables.delta_log import (
+    collect_affected,
+    merge_affected_files,
+    merge_source,
+)
 from lakehouses_spark.tables.log import ConcurrentWriteError  # noqa: F401  (re-export)
 
 MAX_STAT_COLS = 8
@@ -617,11 +622,13 @@ class LakeTable:
             df = df.where(_predicate(col, op, val))
         return df
 
-    def _snapshot(self, st, paths: list[str] | None = None) -> DataFrame:
+    def _snapshot(self, st, paths: list[str] | None = None,
+                  with_path: bool = False) -> DataFrame:
         """Read data files as the LOGICAL schema. Files store PHYSICAL column
         names (immutable once written); renames/drops only move the
         logical→physical mapping in the log — Delta's column-mapping design,
-        which is what makes ALTER TABLE metadata-only at any scale."""
+        which is what makes ALTER TABLE metadata-only at any scale.
+        ``with_path`` adds each row's data file path as ``__fp``."""
         schema = StructType.fromJson(json.loads(st.schema_json))
         phys = _physical_schema(schema, st.column_mapping)
         paths = paths if paths is not None else [str(self.path / rel) for rel in st.files]
@@ -630,8 +637,10 @@ class LakeTable:
 
         def load(group_paths: list[str]) -> DataFrame:
             df = self.spark.read.schema(phys).parquet(*group_paths)
-            if st.column_mapping:
+            if st.column_mapping or with_path:
                 df = df.select(
+                    *([F.col("_metadata.file_path").alias("__fp")]
+                      if with_path else []),
                     *[
                         F.col(st.column_mapping.get(f.name, f.name)).alias(f.name)
                         for f in schema.fields
@@ -840,15 +849,20 @@ class LakeTable:
                 if current.simpleString() != schema.simpleString():
                     raise  # schema moved underneath us — not blindly safe
 
-    def last_txn_version(self, app_id: str) -> int:
-        """Highest committed transaction version for a writer app (scan the
-        log newest-first; cost bounded by commit count)."""
+    def last_txn(self, app_id: str) -> dict:
+        """The operation parameters of a writer app's newest transaction
+        (``txn_version`` and whatever else it stamped), or ``{}``: a scan
+        of the log newest-first, cost bounded by commit count."""
         for v in reversed(txlog.list_versions(self.path)):
             c = txlog.read_commit(self.path, v)
             p = c.get("operation_parameters") or {}
             if p.get("txn_app") == app_id:
-                return int(p["txn_version"])
-        return -1
+                return p
+        return {}
+
+    def last_txn_version(self, app_id: str) -> int:
+        """Highest committed transaction version for a writer app."""
+        return int(self.last_txn(app_id).get("txn_version", -1))
 
     def append_idempotent(
         self, df: DataFrame, app_id: str, txn_version: int, merge_schema: bool = False
@@ -897,29 +911,9 @@ class LakeTable:
     # DML (copy-on-write)
     # ------------------------------------------------------------------ #
     def _collect_affected(self, hits: DataFrame, max_files: int) -> list[str]:
-        """Stream the matched-file set to the driver with an explicit bound
-        (VERDICT r4 #5). The set is file-level metadata — one short path
-        string per file, never rows — but a broad predicate over a table
-        with millions of files would otherwise make a single collect() a
-        driver-memory lever. toLocalIterator() streams it partition by
-        partition, and the guard fails loudly the moment the distinct set
-        exceeds the transaction log's live-file count: impossible for
-        healthy metadata (distinct _metadata.file_path over a scan of N
-        files yields ≤ N values), so a breach means log/scan mismatch and
-        the guard trips before driver memory does.
-
-        r13: the bound now rides INSIDE the plan — ``limit(max_files + 1)``
-        caps what can ever reach the driver at the same N-strings budget,
-        and one collect() replaces toLocalIterator()'s sequential
-        per-partition round trips (32 of them per DML plan on the local
-        shuffle config — measured ~1s of pure fetch latency per verb)."""
-        rows = hits.limit(max_files + 1).collect()
-        if len(rows) > max_files:
-            raise RuntimeError(
-                "matched-file set exceeded the transaction log's "
-                f"live-file count ({max_files}): log/scan mismatch"
-            )
-        return [_strip_scheme(r["__fp"]) for r in rows]
+        """Absolute paths of a matched-file plan (column ``__fp``),
+        collected under `collect_affected`'s live-file-count bound."""
+        return [_strip_scheme(r["__fp"]) for r in collect_affected(hits, max_files)]
 
     def _affected_files(self, cond) -> list[str]:
         """Distributed file-index lookup: which live files contain rows
@@ -939,23 +933,6 @@ class LakeTable:
             ],
         )
         hits = logical.where(cond).select("__fp").distinct()
-        return self._collect_affected(hits, len(paths))
-
-    def _affected_files_for_merge(self, st, src, cond) -> list[str]:
-        """Files containing at least one merge-matched row (semi-join against
-        the source on the merge condition)."""
-        schema = StructType.fromJson(json.loads(st.schema_json))
-        phys = _physical_schema(schema, st.column_mapping)
-        paths = [str(self.path / rel) for rel in st.files]
-        raw = self.spark.read.schema(phys).parquet(*paths)
-        logical = raw.select(
-            F.col("_metadata.file_path").alias("__fp"),
-            *[
-                F.col(st.column_mapping.get(f.name, f.name)).alias(f.name)
-                for f in schema.fields
-            ],
-        ).alias("t")
-        hits = logical.join(src, cond, "left_semi").select("__fp").distinct()
         return self._collect_affected(hits, len(paths))
 
     # ------------------------------------------------------------------ #
@@ -1203,6 +1180,7 @@ class LakeTable:
         txn_app: str | None = None,
         txn_version: int | None = None,
         source_unique_on_key: bool = False,
+        txn_source_version: int | None = None,
     ) -> dict[str, int]:
         """D4/J1: MERGE INTO — upsert with matched-update / not-matched-insert
         (02.delta_lake_primer.py:312-320, 03.iceberg_primer.py:203-215).
@@ -1223,15 +1201,28 @@ class LakeTable:
         ``txn_app``/``txn_version`` stamp Delta's idempotent-writer
         transaction identity onto the MERGE's own commit (readable via
         ``last_txn_version``), so exactly-once streaming sinks don't pay a
-        separate metadata commit per micro-batch.
+        separate metadata commit per micro-batch. ``txn_source_version``
+        rides beside them: the highest source-table version the write
+        consumed (read back with ``last_txn``), so a stream can tell when
+        the commits it should read next are gone.
+
+        Planning is shared with the external Delta and Iceberg MERGE: a
+        source that is not already data (a local, cached or checkpointed
+        relation, under hints and aliases) is ``localCheckpoint()``-ed once
+        and released after the commit (`delta_log.merge_source`), so the
+        affected-file pass, the rewrite, the insert anti-join and the CDF
+        images all read one evaluation. ONE bounded pass over target ⋈
+        source (`delta_log.merge_affected_files`) finds the affected files
+        and, when a matched row may update, raises
+        MergeMultipleMatchesError where several source rows match one
+        target row, before anything is written.
 
         ``source_unique_on_key=True`` asserts the source carries at most one
-        row per merge key, skipping the multiple-match detection job (the
-        runtime check Delta raises MergeMultipleMatchesError from). Only for
+        row per merge key and drops the multiple-match count from the
+        planning pass (a plain left-semi join + distinct then). Only for
         callers whose uniqueness is STRUCTURAL — an aggregation or
         row_number()=1 collapse keyed on the merge key — where the check can
-        never fire and is one pure-overhead scan of the affected files per
-        call.
+        never fire.
         """
         st = self.state()
         schema = StructType.fromJson(json.loads(st.schema_json))
@@ -1240,258 +1231,247 @@ class LakeTable:
             # automatic schema evolution (Delta's autoMerge): source-only
             # columns widen the target; existing rows read them as NULL
             schema = _check_schema(schema, source.schema, merge=True)
-        paths = [str(self.path / rel) for rel in st.files]
-        cond = F.expr(on)
-        src = source.alias("s")
+        # one evaluation of the source feeds every leg (released after)
+        with merge_source(source) as source:
+            paths = [str(self.path / rel) for rel in st.files]
+            cond = F.expr(on)
+            src = source.alias("s")
 
-        affected: list[str] = []
-        if paths:
-            affected = self._affected_files_for_merge(st, src, cond)
+            affected: list[str] = []
+            if paths:
+                # one bounded pass: the affected files, plus Delta's multiple-
+                # match error when a matched row may update (the result would
+                # depend on join order)
+                affected = [_strip_scheme(fp) for fp in merge_affected_files(
+                    self._snapshot(st, paths, with_path=True), src, cond, "__fp",
+                    len(paths),
+                    check_dups=bool(when_matched_update)
+                    and when_matched_delete is not True
+                    and not source_unique_on_key,
+                    err_cls=MergeMultipleMatchesError,
+                )]
 
-        adds: list[dict] = []
-        n_rewritten = 0
-        out_parts: list[DataFrame] = []
-        cdf_on = self._cdf_enabled(st)
-        cdc_parts: list[tuple[DataFrame, str]] = []
-        # conditional delete: TRUE-only semantics (a NULL condition keeps
-        # the row), matching Delta's clause evaluation
-        dcond = (
-            F.expr(when_matched_delete).eqNullSafe(F.lit(True))
-            if isinstance(when_matched_delete, str)
-            else None
-        )
-        if affected:
-            t_aff = self._snapshot(st, affected).alias("t")
-            if (when_matched_update and when_matched_delete is not True
-                    and not source_unique_on_key):
-                # Delta raises when several source rows match one target row
-                # and the merge updates it (the result would depend on join
-                # order). Detect with a synthetic row id — one extra job,
-                # scoped to the affected files only.
-                t_chk = (
-                    self._snapshot(st, affected)
-                    .withColumn("__tid__", F.monotonically_increasing_id())
-                    .alias("t")
-                )
-                n_dup = (
-                    t_chk.join(src, cond, "inner")
-                    .groupBy("__tid__")
-                    .agg(F.count(F.lit(1)).alias("__n__"))
-                    .where(F.col("__n__") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if n_dup:
-                    raise MergeMultipleMatchesError(
-                        "MERGE: multiple source rows matched the same target "
-                        "row with an update clause; dedupe the source on the "
-                        "merge key first"
-                    )
-            is_matched = F.col("s.__m__").isNotNull()
-            # matched rows being conditionally deleted drop out of the
-            # rewrite before any update clause applies; unmatched target
-            # rows (s.* NULL) never satisfy is_matched & dcond
-            drop_deleted = (
-                (lambda df: df.where(~(is_matched & dcond)))
-                if dcond is not None
-                else (lambda df: df)
+            adds: list[dict] = []
+            n_rewritten = 0
+            out_parts: list[DataFrame] = []
+            cdf_on = self._cdf_enabled(st)
+            cdc_parts: list[tuple[DataFrame, str]] = []
+            # conditional delete: TRUE-only semantics (a NULL condition keeps
+            # the row), matching Delta's clause evaluation
+            dcond = (
+                F.expr(when_matched_delete).eqNullSafe(F.lit(True))
+                if isinstance(when_matched_delete, str)
+                else None
             )
-            if when_matched_delete is True:
-                rewritten = t_aff.join(src, cond, "left_anti").select(
-                    *[
-                        F.col(f"t.{c}").alias(c) if c in old_schema.names
-                        else F.lit(None).cast(schema[c].dataType).alias(c)
-                        for c in schema.names
-                    ]
+            if affected:
+                t_aff = self._snapshot(st, affected).alias("t")
+                is_matched = F.col("s.__m__").isNotNull()
+                # matched rows being conditionally deleted drop out of the
+                # rewrite before any update clause applies; unmatched target
+                # rows (s.* NULL) never satisfy is_matched & dcond
+                drop_deleted = (
+                    (lambda df: df.where(~(is_matched & dcond)))
+                    if dcond is not None
+                    else (lambda df: df)
                 )
-            elif when_matched_update == "all":
-                # UPDATE SET *: matched rows take source values VERBATIM —
-                # a NULL in the source must overwrite a non-NULL target
-                # (coalesce would not), so gate on an explicit matched flag.
-                def matched_col(c: str):
-                    in_src = c in source.columns
-                    in_tgt = c in old_schema.names
-                    if in_src and in_tgt:
-                        return (
-                            F.when(is_matched, F.col(f"s.{c}"))
+                if when_matched_delete is True:
+                    rewritten = t_aff.join(src, cond, "left_anti").select(
+                        *[
+                            F.col(f"t.{c}").alias(c) if c in old_schema.names
+                            else F.lit(None).cast(schema[c].dataType).alias(c)
+                            for c in schema.names
+                        ]
+                    )
+                elif when_matched_update == "all":
+                    # UPDATE SET *: matched rows take source values VERBATIM —
+                    # a NULL in the source must overwrite a non-NULL target
+                    # (coalesce would not), so gate on an explicit matched flag.
+                    def matched_col(c: str):
+                        in_src = c in source.columns
+                        in_tgt = c in old_schema.names
+                        if in_src and in_tgt:
+                            return (
+                                F.when(is_matched, F.col(f"s.{c}"))
+                                .otherwise(F.col(f"t.{c}"))
+                                .alias(c)
+                            )
+                        if in_src:  # evolved column: only the source has it
+                            return F.col(f"s.{c}").alias(c)
+                        return F.col(f"t.{c}").alias(c)
+
+                    rewritten = drop_deleted(
+                        t_aff.join(
+                            src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left"
+                        )
+                    ).select(*[matched_col(c) for c in schema.names])
+                elif when_matched_update:
+                    marked = drop_deleted(
+                        t_aff.join(
+                            src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left"
+                        )
+                    )
+                    rewritten = marked.select(
+                        *[
+                            F.when(is_matched, F.expr(when_matched_update[c]).cast(schema[c].dataType))
                             .otherwise(F.col(f"t.{c}"))
                             .alias(c)
-                        )
-                    if in_src:  # evolved column: only the source has it
-                        return F.col(f"s.{c}").alias(c)
-                    return F.col(f"t.{c}").alias(c)
-
-                rewritten = drop_deleted(
-                    t_aff.join(
-                        src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left"
+                            if c in when_matched_update
+                            else F.col(f"t.{c}").alias(c)
+                            for c in schema.names
+                        ]
                     )
-                ).select(*[matched_col(c) for c in schema.names])
-            elif when_matched_update:
-                marked = drop_deleted(
-                    t_aff.join(
-                        src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left"
+                elif dcond is not None:
+                    # delete-only conditional clause: anti-join on cond AND the
+                    # delete condition — keeps every target row no source row
+                    # deletes, and (unlike a left join + filter) never duplicates
+                    # a target row matched by several source rows
+                    rewritten = t_aff.join(
+                        src.withColumn("__m__", F.lit(1)).alias("s"),
+                        cond & dcond, "left_anti"
+                    ).select(
+                        *[
+                            F.col(f"t.{c}").alias(c) if c in old_schema.names
+                            else F.lit(None).cast(schema[c].dataType).alias(c)
+                            for c in schema.names
+                        ]
                     )
-                )
-                rewritten = marked.select(
-                    *[
-                        F.when(is_matched, F.expr(when_matched_update[c]).cast(schema[c].dataType))
-                        .otherwise(F.col(f"t.{c}"))
-                        .alias(c)
-                        if c in when_matched_update
-                        else F.col(f"t.{c}").alias(c)
-                        for c in schema.names
-                    ]
-                )
-            elif dcond is not None:
-                # delete-only conditional clause: anti-join on cond AND the
-                # delete condition — keeps every target row no source row
-                # deletes, and (unlike a left join + filter) never duplicates
-                # a target row matched by several source rows
-                rewritten = t_aff.join(
-                    src.withColumn("__m__", F.lit(1)).alias("s"),
-                    cond & dcond, "left_anti"
-                ).select(
-                    *[
-                        F.col(f"t.{c}").alias(c) if c in old_schema.names
-                        else F.lit(None).cast(schema[c].dataType).alias(c)
-                        for c in schema.names
-                    ]
-                )
-            else:
-                rewritten = t_aff.select(
-                    *[
-                        F.col(f"t.{c}").alias(c) if c in old_schema.names
-                        else F.lit(None).cast(schema[c].dataType).alias(c)
-                        for c in schema.names
-                    ]
-                )
-            if cdf_on:
-                # matched-row change images (CDF): pre = target rows the
-                # source matched; post = those rows with the clause applied
-                t_cdf = self._snapshot(st, affected).alias("t")
-                pre = _conform(t_cdf.join(src, cond, "left_semi"), schema)
-                if dcond is not None:
-                    # conditional clauses: deleted rows = semi-join on
-                    # cond AND dcond (each once, like the rewrite); the
-                    # update images cover only the matched-not-deleted rows
-                    del_pre = _conform(
-                        t_cdf.join(
-                            src.withColumn("__m__", F.lit(1)).alias("s"),
-                            cond & dcond, "left_semi"),
-                        schema)
-                    cdc_parts.append((del_pre, "delete"))
-                    if when_matched_update:
-                        surv = t_cdf.join(
-                            src.withColumn("__m__", F.lit(1)).alias("s"),
-                            cond, "inner").where(~dcond)
-                        upd_pre = surv.select(
-                            *[F.col(f"t.{c}").alias(c)
-                              if c in old_schema.names
-                              else F.lit(None)
-                              .cast(schema[c].dataType).alias(c)
-                              for c in schema.names])
-                        if when_matched_update == "all":
-                            post = surv.select(
-                                *[(F.col(f"s.{c}") if c in source.columns
-                                   else F.col(f"t.{c}")).alias(c)
-                                  for c in schema.names])
-                        else:
-                            post = surv.select(
-                                *[F.expr(when_matched_update[c])
+                else:
+                    rewritten = t_aff.select(
+                        *[
+                            F.col(f"t.{c}").alias(c) if c in old_schema.names
+                            else F.lit(None).cast(schema[c].dataType).alias(c)
+                            for c in schema.names
+                        ]
+                    )
+                if cdf_on:
+                    # matched-row change images (CDF): pre = target rows the
+                    # source matched; post = those rows with the clause applied
+                    t_cdf = self._snapshot(st, affected).alias("t")
+                    pre = _conform(t_cdf.join(src, cond, "left_semi"), schema)
+                    if dcond is not None:
+                        # conditional clauses: deleted rows = semi-join on
+                        # cond AND dcond (each once, like the rewrite); the
+                        # update images cover only the matched-not-deleted rows
+                        del_pre = _conform(
+                            t_cdf.join(
+                                src.withColumn("__m__", F.lit(1)).alias("s"),
+                                cond & dcond, "left_semi"),
+                            schema)
+                        cdc_parts.append((del_pre, "delete"))
+                        if when_matched_update:
+                            surv = t_cdf.join(
+                                src.withColumn("__m__", F.lit(1)).alias("s"),
+                                cond, "inner").where(~dcond)
+                            upd_pre = surv.select(
+                                *[F.col(f"t.{c}").alias(c)
+                                  if c in old_schema.names
+                                  else F.lit(None)
                                   .cast(schema[c].dataType).alias(c)
-                                  if c in when_matched_update
-                                  else (F.col(f"t.{c}").alias(c)
-                                        if c in old_schema.names
-                                        else F.lit(None)
-                                        .cast(schema[c].dataType).alias(c))
                                   for c in schema.names])
-                        cdc_parts += [(upd_pre, "update_preimage"),
+                            if when_matched_update == "all":
+                                post = surv.select(
+                                    *[(F.col(f"s.{c}") if c in source.columns
+                                       else F.col(f"t.{c}")).alias(c)
+                                      for c in schema.names])
+                            else:
+                                post = surv.select(
+                                    *[F.expr(when_matched_update[c])
+                                      .cast(schema[c].dataType).alias(c)
+                                      if c in when_matched_update
+                                      else (F.col(f"t.{c}").alias(c)
+                                            if c in old_schema.names
+                                            else F.lit(None)
+                                            .cast(schema[c].dataType).alias(c))
+                                      for c in schema.names])
+                            cdc_parts += [(upd_pre, "update_preimage"),
+                                          (post, "update_postimage")]
+                    elif when_matched_delete:
+                        cdc_parts.append((pre, "delete"))
+                    elif when_matched_update == "all":
+                        post = t_cdf.join(src, cond, "inner").select(
+                            *[(F.col(f"s.{c}") if c in source.columns
+                               else F.col(f"t.{c}")).alias(c)
+                              for c in schema.names])
+                        cdc_parts += [(pre, "update_preimage"),
                                       (post, "update_postimage")]
-                elif when_matched_delete:
-                    cdc_parts.append((pre, "delete"))
-                elif when_matched_update == "all":
-                    post = t_cdf.join(src, cond, "inner").select(
-                        *[(F.col(f"s.{c}") if c in source.columns
-                           else F.col(f"t.{c}")).alias(c)
-                          for c in schema.names])
-                    cdc_parts += [(pre, "update_preimage"),
-                                  (post, "update_postimage")]
-                elif when_matched_update:
-                    post = t_cdf.join(src, cond, "inner").select(
-                        *[F.expr(when_matched_update[c])
-                          .cast(schema[c].dataType).alias(c)
-                          if c in when_matched_update
-                          else (F.col(f"t.{c}").alias(c)
-                                if c in old_schema.names
-                                else F.lit(None)
-                                .cast(schema[c].dataType).alias(c))
-                          for c in schema.names])
-                    cdc_parts += [(pre, "update_preimage"),
-                                  (post, "update_postimage")]
-            out_parts.append(rewritten)
-            n_rewritten = len(affected)
+                    elif when_matched_update:
+                        post = t_cdf.join(src, cond, "inner").select(
+                            *[F.expr(when_matched_update[c])
+                              .cast(schema[c].dataType).alias(c)
+                              if c in when_matched_update
+                              else (F.col(f"t.{c}").alias(c)
+                                    if c in old_schema.names
+                                    else F.lit(None)
+                                    .cast(schema[c].dataType).alias(c))
+                              for c in schema.names])
+                        cdc_parts += [(pre, "update_preimage"),
+                                      (post, "update_postimage")]
+                out_parts.append(rewritten)
+                n_rewritten = len(affected)
 
-        if when_not_matched_insert:
-            if paths and affected:
-                # (r13) anti-join against the AFFECTED files only, not the
-                # whole table: any target row matching a source row lives in
-                # an affected file by construction (affected = files with at
-                # least one semi-join hit), so the unmatched-source set is
-                # identical and the insert leg stops re-scanning the table.
-                t_all = self._snapshot(st, affected).alias("t")
-                inserts = src.join(t_all, cond, "left_anti")
-            else:
-                # no live files, or no file holds any matched row — every
-                # source row is unmatched by construction, so the anti-join
-                # (against an empty, stats-less frame it would sort-merge)
-                # drops out entirely
-                inserts = src
-            if when_not_matched_insert_condition:
-                # Delta's whenNotMatchedInsert(condition=...): evaluated on
-                # the unmatched source row, TRUE-only semantics
-                inserts = inserts.where(
-                    F.expr(when_not_matched_insert_condition)
-                    .eqNullSafe(F.lit(True))
-                )
-            if when_not_matched_insert == "all":
-                ins = _conform(inserts, schema)
-            else:
-                ins = inserts.select(
-                    *[
-                        F.expr(when_not_matched_insert[c]).cast(schema[c].dataType).alias(c)
-                        if c in when_not_matched_insert
-                        else F.lit(None).cast(schema[c].dataType).alias(c)
-                        for c in schema.names
-                    ]
-                )
-            if cdf_on:
-                cdc_parts.append((ins, "insert"))
-            out_parts.append(ins)
+            if when_not_matched_insert:
+                if paths and affected:
+                    # (r13) anti-join against the AFFECTED files only, not the
+                    # whole table: any target row matching a source row lives in
+                    # an affected file by construction (affected = files with at
+                    # least one semi-join hit), so the unmatched-source set is
+                    # identical and the insert leg stops re-scanning the table.
+                    t_all = self._snapshot(st, affected).alias("t")
+                    inserts = src.join(t_all, cond, "left_anti")
+                else:
+                    # no live files, or no file holds any matched row — every
+                    # source row is unmatched by construction, so the anti-join
+                    # (against an empty, stats-less frame it would sort-merge)
+                    # drops out entirely
+                    inserts = src
+                if when_not_matched_insert_condition:
+                    # Delta's whenNotMatchedInsert(condition=...): evaluated on
+                    # the unmatched source row, TRUE-only semantics
+                    inserts = inserts.where(
+                        F.expr(when_not_matched_insert_condition)
+                        .eqNullSafe(F.lit(True))
+                    )
+                if when_not_matched_insert == "all":
+                    ins = _conform(inserts, schema)
+                else:
+                    ins = inserts.select(
+                        *[
+                            F.expr(when_not_matched_insert[c]).cast(schema[c].dataType).alias(c)
+                            if c in when_not_matched_insert
+                            else F.lit(None).cast(schema[c].dataType).alias(c)
+                            for c in schema.names
+                        ]
+                    )
+                if cdf_on:
+                    cdc_parts.append((ins, "insert"))
+                out_parts.append(ins)
 
-        if out_parts:
-            out = out_parts[0]
-            for p in out_parts[1:]:
-                out = out.unionByName(p)
-            self._verify_constraints(out, st)
-            adds = self._write_files(out, st.partition_by, state=st)
+            if out_parts:
+                out = out_parts[0]
+                for p in out_parts[1:]:
+                    out = out.unionByName(p)
+                self._verify_constraints(out, st)
+                adds = self._write_files(out, st.partition_by, state=st)
 
-        cdc = self._write_change_data(cdc_parts, schema) if cdf_on else None
-        op_params: dict = {"predicate": on}
-        if txn_app is not None:
-            # idempotent-writer identity rides the MERGE commit itself —
-            # no separate bookkeeping commit per streaming micro-batch
-            op_params["txn_app"] = txn_app
-            op_params["txn_version"] = txn_version
-        self._commit(
-            st.version + 1,
-            operation="MERGE",
-            operation_parameters=op_params,
-            add=adds,
-            remove=[_rel(self.path, p) for p in affected],
-            schema=schema.json() if schema != old_schema else None,
-            cdc=cdc,
-        )
-        return {"rewritten_files": n_rewritten, "added_files": len(adds)}
+            cdc = self._write_change_data(cdc_parts, schema) if cdf_on else None
+            op_params: dict = {"predicate": on}
+            if txn_app is not None:
+                # idempotent-writer identity rides the MERGE commit itself —
+                # no separate bookkeeping commit per streaming micro-batch
+                op_params["txn_app"] = txn_app
+                op_params["txn_version"] = txn_version
+                if txn_source_version is not None:
+                    op_params["txn_source_version"] = txn_source_version
+            self._commit(
+                st.version + 1,
+                operation="MERGE",
+                operation_parameters=op_params,
+                add=adds,
+                remove=[_rel(self.path, p) for p in affected],
+                schema=schema.json() if schema != old_schema else None,
+                cdc=cdc,
+            )
+            return {"rewritten_files": n_rewritten, "added_files": len(adds)}
 
     # ------------------------------------------------------------------ #
     # ALTER TABLE surface (D9) + CHECK constraints

@@ -238,6 +238,21 @@ def test_apply_changes_first_drain_reads_snapshot(spark, tmp_path, upkeep):
     assert _silver(spark, tmp_path) == _lww(bronze.read())
 
 
+def test_apply_changes_fails_on_data_loss(spark, tmp_path):
+    """cleanup_log deleted bronze commits the stream had not read yet: the
+    next drain fails with a data-loss error before any write (like Delta's
+    failOnDataLoss) instead of silently skipping their changes."""
+    bronze = LakeTable.create(spark, tmp_path / "bronze", _changes(spark, 0, 2))
+    _drain_changes(spark, bronze, tmp_path)
+    silver_v = LakeTable(spark, tmp_path / "silver").version
+    for i in range(1, 12):  # v10 is a log checkpoint
+        bronze.append(_changes(spark, 2 * i, 2))
+    assert bronze.cleanup_log(keep_versions=1) == list(range(10))
+    with pytest.raises(Exception, match="data loss"):
+        _drain_changes(spark, bronze, tmp_path)
+    assert LakeTable(spark, tmp_path / "silver").version == silver_v
+
+
 def test_apply_changes_rejects_python_source_checkpoint(spark, tmp_path):
     """A checkpoint written by the earlier drain over the `laketable` Python
     source holds {"version": N} offsets, which the commit-file stream cannot

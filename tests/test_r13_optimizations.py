@@ -276,3 +276,140 @@ def test_iceberg_mor_delete_update_single_candidate_scan(
                      where="o_orderstatus = 'P'")
     assert res["rewritten_files"] == 0 and res["updated_rows"] > 0
     assert calls["n"] == 1, f"MOR UPDATE built {calls['n']} candidate scans"
+
+
+# -------------------------------------------------------------------------
+# MERGE planning shared by the three write planes: the source is evaluated
+# once, and one bounded pass finds the affected files and multiple matches
+# -------------------------------------------------------------------------
+PLANES = ["lake", "delta", "iceberg"]
+TARGET = [(k, f"v{k}") for k in range(20)]
+
+
+def _plane_table(spark, plane, path):
+    from lakehouses_spark.tables.delta_log import write_delta_table
+    from lakehouses_spark.tables.iceberg_meta import write_iceberg_table
+
+    df = spark.createDataFrame(TARGET, "k long, v string")
+    if plane == "lake":
+        return LakeTable.create(spark, path, df)
+    if plane == "delta":
+        return write_delta_table(spark, df, path)
+    return write_iceberg_table(spark, df, path)
+
+
+def _plane_state(spark, plane, path):
+    """(version, sorted rows) of a plane's table, read by a fresh handle."""
+    from lakehouses_spark.tables.delta_log import DeltaLogReader
+    from lakehouses_spark.tables.iceberg_meta import IcebergMetadataReader
+
+    if plane == "lake":
+        t = LakeTable(spark, path)
+        version, df = t.version, t.read()
+    elif plane == "delta":
+        t = DeltaLogReader(spark, path)
+        version, df = t.versions()[-1], t.to_df()
+    else:
+        t = IcebergMetadataReader(spark, path)
+        version, df = t.meta["current-snapshot-id"], t.to_df()
+    return version, sorted((r.k, r.v) for r in df.collect())
+
+
+def _stored_rdds(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _job_names(spark, fn):
+    """Names (call sites) of the Spark jobs ``fn`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-under-test", "merge-under-test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    return [store.job(j).name()
+            for j in sc.statusTracker().getJobIdsForGroup("merge-under-test")]
+
+
+@pytest.mark.parametrize("plane", PLANES)
+def test_merge_evaluates_its_source_once(spark, tmp_path, plane):
+    """A source that is not already data is materialized once: its merge
+    key comes from a Python UDF that counts the rows it sees, and after the
+    MERGE the count equals the source's row count (every leg — affected
+    files, rewrite, insert anti-join — reads the one evaluation). The
+    blocks the MERGE materialized are released when it returns."""
+    from pyspark.sql.types import LongType
+
+    path = tmp_path / plane
+    t = _plane_table(spark, plane, path)
+    seen = spark.sparkContext.accumulator(0)
+
+    def key(k):
+        seen.add(1)
+        return k
+
+    rows = [(k, f"s{k}") for k in range(15, 25)]
+    src = spark.createDataFrame(rows, "k0 long, v string").select(
+        F.udf(key, LongType())("k0").alias("k"), "v")
+    stored = _stored_rdds(spark)
+    t.merge(src, "t.k = s.k")
+    assert seen.value == len(rows)
+    assert _stored_rdds(spark) <= stored
+    assert _plane_state(spark, plane, path)[1] == sorted(TARGET[:15] + rows)
+
+
+@pytest.mark.parametrize("plane", PLANES)
+def test_merge_passes_a_checkpointed_source_through(spark, tmp_path, plane):
+    """A caller's checkpointed, hinted source is already data: the MERGE
+    runs no localCheckpoint job, and the caller's checkpoint stays
+    readable after it."""
+    path = tmp_path / plane
+    t = _plane_table(spark, plane, path)
+    rows = [(k, f"s{k}") for k in range(15, 25)]
+    src = spark.createDataFrame(rows, "k long, v string").localCheckpoint()
+    stored = _stored_rdds(spark)
+    names = _job_names(
+        spark, lambda: t.merge(src.hint("shuffle_hash"), "t.k = s.k"))
+    assert names and not [n for n in names if n.startswith("localCheckpoint")]
+    assert sorted(tuple(r) for r in src.collect()) == rows
+    assert _stored_rdds(spark) <= stored
+    assert _plane_state(spark, plane, path)[1] == sorted(TARGET[:15] + rows)
+
+
+@pytest.mark.parametrize("plane", PLANES)
+def test_multimatch_merge_raises_before_writing(spark, tmp_path, plane):
+    """The multiple-match check rides the affected-file pass and still
+    raises before anything is written: the table version is unchanged
+    and no new file is on disk."""
+    from lakehouses_spark.tables.delta_log import DeltaProtocolError
+    from lakehouses_spark.tables.iceberg_meta import IcebergFormatError
+    from lakehouses_spark.tables.table import MergeMultipleMatchesError
+
+    path = tmp_path / plane
+    t = _plane_table(spark, plane, path)
+    before = _plane_state(spark, plane, path)
+    files = set(path.rglob("*"))
+    dup = spark.createDataFrame(
+        [(3, "x"), (3, "y"), (30, "new")], "k long, v string")
+    err = {"lake": MergeMultipleMatchesError, "delta": DeltaProtocolError,
+           "iceberg": IcebergFormatError}[plane]
+    with pytest.raises(err, match="multiple source rows"):
+        t.merge(dup, "t.k = s.k")
+    assert _plane_state(spark, plane, path) == before
+    assert set(path.rglob("*")) == files
+
+
+def test_multimatch_on_a_deleted_row_does_not_raise(spark, tmp_path):
+    """The folded check counts live target rows only: several source rows
+    matching a row a merge-on-read DELETE already removed insert, they do
+    not raise."""
+    t = _plane_table(spark, "lake", tmp_path / "lake")
+    t.delete("k = 3", lazy=True)
+    t.merge(spark.createDataFrame([(3, "x"), (3, "x")], "k long, v string"),
+            "t.k = s.k")
+    rows = _plane_state(spark, "lake", tmp_path / "lake")[1]
+    assert [r for r in rows if r[0] == 3] == [(3, "x"), (3, "x")]
