@@ -887,48 +887,141 @@ def merge_affected_files(target: DataFrame, src: DataFrame, cond: Column,
     return [r[fp] for r in rows]
 
 
-def merge_rewritten(sub, src, cond, names, dtype_of, source_cols,
-                    when_matched_update, when_matched_delete):
-    """Rewritten contents of the MERGE-affected files (target aliased
-    ``t``, source ``s``): matched rows deleted / replaced by source
-    columns / SET expressions per the clause; unmatched rows of the same
-    files carry over verbatim. Shared by the Delta and Iceberg external
-    MERGE implementations — identical clause surface on both formats."""
-    if when_matched_delete:
-        return sub.join(src, cond, "left_anti").select(
-            *[F.col(f"t.{c}").alias(c) for c in names])
+def conform(df: DataFrame, schema: StructType) -> DataFrame:
+    """Project df to the table schema, cast to its types, nulling absent
+    columns."""
+    return df.select(
+        *[
+            F.col(f.name).cast(f.dataType) if f.name in df.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
+    )
+
+
+def merge_clauses(t_aff: DataFrame | None, src: DataFrame, cond: Column,
+                  schema: StructType,
+                  when_matched_update: dict[str, str] | str | None,
+                  when_matched_delete: bool | str,
+                  when_not_matched_insert: dict[str, str] | str | None,
+                  when_not_matched_insert_condition: str | None = None,
+                  cdf: bool = False):
+    """The MERGE clause semantics, shared by the three write planes:
+    what a MERGE writes once planning (`merge_affected_files`) found the
+    affected files. ``t_aff`` is the target restricted to those files
+    (None when there are none), ``src`` the source aliased ``s``,
+    ``schema`` the table schema after any evolution. Returns
+    ``(rewritten, inserts, images)``:
+
+    - ``rewritten``: the affected files' new contents (None without
+      ``t_aff``). Matched rows are deleted (``when_matched_delete``),
+      take the source columns (``when_matched_update="all"``, NULLs
+      included: an explicit matched flag, not coalesce) or the SET
+      expressions (a dict), cast to the table types; unmatched rows
+      carry over verbatim. A STRING
+      ``when_matched_delete`` (Delta's whenMatchedDelete(condition=...))
+      deletes only the matched rows where it is TRUE over the joined
+      ``t``/``s`` pair; the others fall through to the update clause.
+    - ``inserts``: source rows matching no target row, gated by
+      ``when_not_matched_insert_condition`` (on the source row, TRUE
+      only), shaped and cast to the table schema; None without an insert
+      clause. Any target row matching a source row lives in an affected
+      file, so the anti-join reads ``t_aff`` only — and drops out when
+      there is none.
+    - ``images``: with ``cdf``, the matched rows' change images as
+      ``(frame, change_type)`` pairs. The insert image is the inserts as
+      written; each plane adds it after its own shaping.
+
+    ``t_aff`` is widened first, so the columns an evolving MERGE adds
+    read NULL on every target row.
+    """
+    names = schema.names
+    t = None
+    if t_aff is not None:
+        extra = {f.name: F.lit(None).cast(f.dataType)
+                 for f in schema.fields if f.name not in t_aff.columns}
+        t = (t_aff.withColumns(extra) if extra else t_aff).alias("t")
+    # conditional delete: TRUE-only semantics (a NULL condition keeps the
+    # row), matching Delta's clause evaluation
+    dcond = (F.expr(when_matched_delete).eqNullSafe(F.lit(True))
+             if isinstance(when_matched_delete, str) else None)
+    marked = src.withColumn("__m__", F.lit(1)).alias("s")
+    is_matched = F.col("s.__m__").isNotNull()
+
+    def kept(df: DataFrame) -> DataFrame:
+        return df.select(*[F.col(f"t.{c}").alias(c) for c in names])
+
+    # a matched row's new value per updated column; the others keep theirs
     if when_matched_update == "all":
-        is_matched = F.col("s.__m__").isNotNull()
-        marked = sub.join(
-            src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left")
-        return marked.select(*[
-            (F.when(is_matched, F.col(f"s.{c}"))
-             .otherwise(F.col(f"t.{c}")).alias(c))
-            if c in source_cols else F.col(f"t.{c}").alias(c)
-            for c in names])
-    if when_matched_update:
-        is_matched = F.col("s.__m__").isNotNull()
-        marked = sub.join(
-            src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left")
-        return marked.select(*[
-            F.when(is_matched,
-                   F.expr(when_matched_update[c]).cast(dtype_of[c]))
-            .otherwise(F.col(f"t.{c}")).alias(c)
-            if c in when_matched_update
-            else F.col(f"t.{c}").alias(c)
-            for c in names])
-    return sub.select(*[F.col(f"t.{c}").alias(c) for c in names])
+        upd = {c: F.col(f"s.{c}").cast(schema[c].dataType)
+               for c in names if c in src.columns}
+    else:
+        upd = {c: F.expr(when_matched_update[c]).cast(schema[c].dataType)
+               for c in names if c in (when_matched_update or {})}
 
+    rewritten = None
+    images: list[tuple[DataFrame, str]] = []
+    if t is not None:
+        if when_matched_delete is True:
+            rewritten = kept(t.join(src, cond, "left_anti"))
+        elif when_matched_update:
+            joined = t.join(marked, cond, "left")
+            if dcond is not None:
+                # matched rows being deleted drop out before the update;
+                # unmatched target rows (s.* NULL) never satisfy it
+                joined = joined.where(~(is_matched & dcond))
+            rewritten = joined.select(*[
+                F.when(is_matched, upd[c]).otherwise(F.col(f"t.{c}")).alias(c)
+                if c in upd else F.col(f"t.{c}").alias(c) for c in names])
+        elif dcond is not None:
+            # delete-only conditional clause: anti-join on cond AND the
+            # delete condition — keeps every target row no source row
+            # deletes, and (unlike a left join + filter) never duplicates
+            # a target row matched by several source rows
+            rewritten = kept(t.join(marked, cond & dcond, "left_anti"))
+        else:
+            rewritten = kept(t)
+        if cdf:
+            # pre = target rows the source matched; post = those rows with
+            # the clause applied
+            pre = conform(t.join(src, cond, "left_semi"), schema)
+            matched = None
+            if dcond is not None:
+                # deleted rows = semi-join on cond AND dcond (each once,
+                # like the rewrite); the update images cover only the
+                # matched-not-deleted rows
+                images.append((conform(
+                    t.join(marked, cond & dcond, "left_semi"), schema),
+                    "delete"))
+                if when_matched_update:
+                    matched = t.join(marked, cond, "inner").where(~dcond)
+                    pre = kept(matched)
+            elif when_matched_delete:
+                images.append((pre, "delete"))
+            elif when_matched_update:
+                matched = t.join(src, cond, "inner")
+            if matched is not None:
+                images += [(pre, "update_preimage"),
+                           (matched.select(*[
+                               upd.get(c, F.col(f"t.{c}")).alias(c)
+                               for c in names]), "update_postimage")]
 
-def merge_widen(df, extra, dtype_of):
-    """Target-side rows under a schema-evolving MERGE: the new columns
-    read NULL. Shared by the format twins (r12 review) like the other
-    merge helpers."""
-    if extra:
-        df = df.withColumns({
-            c: F.lit(None).cast(dtype_of[c]) for c in extra
-        })
-    return df
+    inserts = None
+    if when_not_matched_insert:
+        unmatched = src if t is None else src.join(t, cond, "left_anti")
+        if when_not_matched_insert_condition:
+            unmatched = unmatched.where(
+                F.expr(when_not_matched_insert_condition)
+                .eqNullSafe(F.lit(True)))
+        if when_not_matched_insert == "all":
+            inserts = conform(unmatched, schema)
+        else:
+            inserts = unmatched.select(*[
+                F.expr(when_not_matched_insert[c]).cast(schema[c].dataType)
+                .alias(c) if c in when_not_matched_insert
+                else F.lit(None).cast(schema[c].dataType).alias(c)
+                for c in names])
+    return rewritten, inserts, images
 
 
 def merge_insert_required_check(fields, source_cols,
@@ -1045,27 +1138,6 @@ def bump_identity_metadata(metadata: dict,
             md["delta.identity.highWaterMark"] = new_hwms[f["name"]]
             f["metadata"] = md
     return {**metadata, "schemaString": json.dumps(schema_json)}
-
-
-def merge_inserts(src, t_aff, cond, names, dtype_of, source_cols,
-                  when_not_matched_insert):
-    """Source rows matching no target row, shaped to the table schema
-    (absent columns null; insert SET expressions applied). ``t_aff`` is
-    the target restricted to the MERGE's affected files: a target row
-    matching a source row lives in an affected file by construction, so
-    the anti-join never reads the rest of the table. ``None`` (no
-    affected file) means every source row is unmatched."""
-    unmatched = src if t_aff is None else src.join(t_aff, cond, "left_anti")
-    if when_not_matched_insert == "all":
-        return unmatched.select(*[
-            F.col(c).alias(c) if c in source_cols
-            else F.lit(None).cast(dtype_of[c]).alias(c)
-            for c in names])
-    return unmatched.select(*[
-        F.expr(when_not_matched_insert[c]).cast(dtype_of[c]).alias(c)
-        if c in when_not_matched_insert
-        else F.lit(None).cast(dtype_of[c]).alias(c)
-        for c in names])
 
 
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
@@ -3842,7 +3914,11 @@ class DeltaLogReader:
         bounded pass over target ⋈ source keyed by `_metadata.file_path`
         finds the affected files and, under an update clause, the
         multiple-match error (`merge_affected_files`), before anything is
-        written. 100 TB shape: the rewrite and the insert anti-join read
+        written. The rewritten rows, the inserts (cast to the table
+        types) and the CDF images come from the clause engine shared with
+        `LakeTable.merge` (`merge_clauses`); this method keeps identity
+        allocation, generated columns, the column-mapping checks and the
+        commit. 100 TB shape: the rewrite and the insert anti-join read
         only the affected files — O(affected + inserts), never the
         table."""
         snap = self.snapshot()
@@ -3887,11 +3963,6 @@ class DeltaLogReader:
                 **snap.metadata, "schemaString": json.dumps(schema_json),
             }
             schema = StructType.fromJson(schema_json)
-            names = [f.name for f in schema.fields]
-
-        def widen(df: DataFrame) -> DataFrame:
-            return merge_widen(
-                df, extra, {c: schema[c].dataType for c in extra})
 
         gen = generated_columns(schema)
         idc = identity_columns(schema)
@@ -3930,56 +4001,22 @@ class DeltaLogReader:
                     "version": snap.version}
             rel_of = {str((self.path / p).resolve()): p for p in snap.files}
             cdf_on = conf.get("delta.enableChangeDataFeed") == "true"
-            out_parts: list[DataFrame] = []
-            cdc_parts: list[DataFrame] = []
-            if affected:
-                # both rewrite-side reads list and scan ONLY the matched files
-                sub = widen(self.to_df(
-                    _with_path=True, _paths=set(affected))).alias("t")
-                dtype_of = {f.name: f.dataType for f in schema.fields}
-                out_parts.append(merge_rewritten(
-                    sub, src, cond, names, dtype_of, source.columns,
-                    when_matched_update, when_matched_delete,
-                ))
-                if cdf_on:
-                    pre = sub.join(src, cond, "left_semi").select(
-                        *[F.col(f"t.{c}").alias(c) for c in names])
-                    if when_matched_delete:
-                        cdc_parts.append(pre.withColumn(
-                            "_change_type", F.lit("delete")))
-                    elif when_matched_update == "all":
-                        post = sub.join(src, cond, "inner").select(*[
-                            (F.col(f"s.{c}") if c in source.columns
-                             else F.col(f"t.{c}")).alias(c)
-                            for c in names])
-                        cdc_parts.append(pre.withColumn(
-                            "_change_type", F.lit("update_preimage")))
-                        cdc_parts.append(post.withColumn(
-                            "_change_type", F.lit("update_postimage")))
-                    elif when_matched_update:
-                        post = sub.join(src, cond, "inner").select(*[
-                            F.expr(when_matched_update[c])
-                            .cast(schema[c].dataType).alias(c)
-                            if c in when_matched_update
-                            else F.col(f"t.{c}").alias(c)
-                            for c in names])
-                        cdc_parts.append(pre.withColumn(
-                            "_change_type", F.lit("update_preimage")))
-                        cdc_parts.append(post.withColumn(
-                            "_change_type", F.lit("update_postimage")))
-
-            n_inserted = 0
-            new_hwms: dict[str, int] = {}
             if when_not_matched_insert:
                 merge_insert_required_check(
                     schema.fields, source.columns, when_not_matched_insert,
                     DeltaProtocolError, computed=set(gen) | set(idc))
-                ins = merge_inserts(
-                    src, self.to_df(_paths=set(affected)).alias("t")
-                    if affected else None, cond, names,
-                    {f.name: f.dataType for f in schema.fields},
-                    source.columns, when_not_matched_insert,
-                )
+            # the rewrite and the insert anti-join read ONLY the matched files
+            rewritten, ins, images = merge_clauses(
+                self.to_df(_paths=set(affected)) if affected else None, src,
+                cond, schema, when_matched_update, when_matched_delete,
+                when_not_matched_insert, cdf=cdf_on,
+            )
+            out_parts = [] if rewritten is None else [rewritten]
+            cdc_parts = [df.withColumn("_change_type", F.lit(ct))
+                         for df, ct in images]
+            n_inserted = 0
+            new_hwms: dict[str, int] = {}
+            if ins is not None:
                 # single-pass insert leg (VERDICT r11): the count
                 # materializes the anti-join (a lazy checkpoint: no job of
                 # its own); the COW write and the CDF image read its blocks

@@ -1981,15 +1981,7 @@ class IcebergMetadataReader:
         entries = self._added_entries(
             new_rels, new_id, seq, fid_of_phys, dt_of_phys)
         n_added = len(entries)  # zero-row partitions were dropped
-        for e in live:  # relist every replaced file as DELETED
-            entries.append({
-                "status": 2,
-                "snapshot_id": new_id,
-                "sequence_number": e.get("sequence_number"),
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-                "__spec_id": e.get("__spec_id"),
-            })
+        entries += self._relist_live(live, new_id, deleted=None)[0]
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="replace",
@@ -2222,6 +2214,45 @@ class IcebergMetadataReader:
                         "avro": avro_t})
         return {"spec_id": spec_id, "fields": out,
                 "spec_json": json.dumps(fields)}
+
+    def _relist_live(self, live: list[dict], new_id: int,
+                     deleted: set[str] | None = frozenset()
+                     ) -> tuple[list[dict], int, list[dict]]:
+        """The current snapshot's state carried into the next one:
+        ``live`` data entries relisted EXISTING (status 0, at their
+        original snapshot and sequence numbers) or, when their resolved
+        path is in ``deleted``, DELETED (status 2, ``snapshot_id`` =
+        ``new_id``), and the live delete manifests (manifest-list
+        ``content == 1``) to carry, so their deletes keep applying: a
+        position delete binds a path (inert once that file is DELETED),
+        an equality delete a sequence number (below any file this commit
+        adds, whose rows it already applied). ``deleted=None`` is a full
+        replace (rewrite_data_files): every entry DELETED and no delete
+        manifest carried, their rows being physically gone. Returns
+        (entries, number DELETED, carried)."""
+        entries = []
+        for e in live:
+            gone = deleted is None or str(self._local_data(
+                e["data_file"]["file_path"]).resolve()) in deleted
+            entries.append({
+                "status": 2 if gone else 0,
+                # spec: snapshot_id = snapshot that ADDED the file, or the
+                # one that DELETED it when status is 2
+                "snapshot_id": new_id if gone else e.get("snapshot_id"),
+                "sequence_number": e.get("sequence_number"),
+                "file_sequence_number": e.get("file_sequence_number"),
+                "data_file": e["data_file"],
+                "__spec_id": e.get("__spec_id"),
+            })
+        snap = self._snapshot()
+        carried = []
+        if deleted is not None and snap is not None:
+            _, ml_rows = read_ocf_bytes(
+                self._local(snap["manifest-list"]).read_bytes())
+            carried = [r for r in ml_rows
+                       if int(r.get("content", 0) or 0) == 1]
+        n_deleted = sum(e["status"] == 2 for e in entries)
+        return entries, n_deleted, carried
 
     def _commit_snapshot(self, entries: list[dict], ice: dict,
                          new_id: int, seq: int, operation: str,
@@ -2493,21 +2524,8 @@ class IcebergMetadataReader:
             },
         }]
         live = self._live_data_entries()
-        entries = [{
-            "status": 0,  # every data file stays EXISTING, untouched
-            "snapshot_id": e.get("snapshot_id"),
-            "sequence_number": e.get("sequence_number"),
-            "file_sequence_number": e.get("file_sequence_number"),
-            "data_file": e["data_file"],
-            "__spec_id": e.get("__spec_id"),
-        } for e in live]
-        snap = self._snapshot()
-        carried = []
-        if snap is not None:
-            _, ml_rows = read_ocf_bytes(
-                self._local(snap["manifest-list"]).read_bytes())
-            carried = [r for r in ml_rows
-                       if int(r.get("content", 0) or 0) == 1]
+        # every data file stays EXISTING, untouched
+        entries, _, carried = self._relist_live(live, new_id)
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="delete",
@@ -2651,21 +2669,8 @@ class IcebergMetadataReader:
             matches, live, new_id, seq)
         if not delete_entries:
             return plan
-        entries = [{
-            "status": 0,  # every data file stays EXISTING, untouched
-            "snapshot_id": e.get("snapshot_id"),
-            "sequence_number": e.get("sequence_number"),
-            "file_sequence_number": e.get("file_sequence_number"),
-            "data_file": e["data_file"],
-            "__spec_id": e.get("__spec_id"),
-        } for e in live]
-        snap = self._snapshot()
-        carried = []
-        if snap is not None:
-            _, ml_rows = read_ocf_bytes(
-                self._local(snap["manifest-list"]).read_bytes())
-            carried = [r for r in ml_rows
-                       if int(r.get("content", 0) or 0) == 1]
+        # every data file stays EXISTING, untouched
+        entries, _, carried = self._relist_live(live, new_id)
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="delete",
@@ -2762,22 +2767,8 @@ class IcebergMetadataReader:
         entries = self._added_entries(
             new_rels, new_id, seq, fid_of_phys, dt_of_phys)
         n_added = len(entries)
-        for e in live:
-            entries.append({
-                "status": 0,  # every prior data file stays EXISTING
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e.get("sequence_number"),
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-                "__spec_id": e.get("__spec_id"),
-            })
-        snap = self._snapshot()
-        carried = []
-        if snap is not None:
-            _, ml_rows = read_ocf_bytes(
-                self._local(snap["manifest-list"]).read_bytes())
-            carried = [r for r in ml_rows
-                       if int(r.get("content", 0) or 0) == 1]
+        relisted, _, carried = self._relist_live(live, new_id)
+        entries += relisted
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="overwrite",
@@ -2882,23 +2873,8 @@ class IcebergMetadataReader:
             new_rels, new_id, seq, fid_of_phys, dt_of_phys)
         n_added = len(entries)
         live = self._live_data_entries()
-        for e in live:
-            entries.append({
-                "status": 0,  # EXISTING
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": e.get("sequence_number"),
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-                "__spec_id": e.get("__spec_id"),
-            })
-        snap = self._snapshot()
-        carried = []
-        if snap is not None:
-            _, ml_rows = read_ocf_bytes(
-                self._local(snap["manifest-list"]).read_bytes())
-            carried = [
-                r for r in ml_rows if int(r.get("content", 0) or 0) == 1
-            ]
+        relisted, _, carried = self._relist_live(live, new_id)
+        entries += relisted
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="append",
@@ -2979,31 +2955,9 @@ class IcebergMetadataReader:
         entries = self._added_entries(
             new_rels, new_id, seq, fid_of_phys, dt_of_phys)
         n_added = len(entries)
-        n_deleted = 0
-        for e in live:
-            ap = str(self._local_data(
-                e["data_file"]["file_path"]).resolve())
-            is_affected = ap in affected
-            n_deleted += is_affected
-            entries.append({
-                "status": 2 if is_affected else 0,  # DELETED / EXISTING
-                "snapshot_id": new_id if is_affected
-                else e.get("snapshot_id"),
-                "sequence_number": e.get("sequence_number"),
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-                "__spec_id": e.get("__spec_id"),
-            })
-        # delete manifests carry over like the COW DML: position deletes
-        # bind old paths (inert once those files are DELETED), equality
-        # deletes bind by sequence number (< the new files' seq)
-        snap = self._snapshot()
-        carried = []
-        if snap is not None:
-            _, ml_rows = read_ocf_bytes(
-                self._local(snap["manifest-list"]).read_bytes())
-            carried = [r for r in ml_rows
-                       if int(r.get("content", 0) or 0) == 1]
+        relisted, n_deleted, carried = self._relist_live(
+            live, new_id, affected)
+        entries += relisted
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="overwrite",
@@ -3102,8 +3056,10 @@ class IcebergMetadataReader:
     ) -> dict:
         """MERGE INTO on an external Iceberg v2 table, copy-on-write —
         the format twin of `DeltaLogReader.merge` with the identical
-        clause surface (the shared `merge_rewritten`/`merge_inserts`
-        helpers compute both): `on` references columns as t.<col> /
+        clause surface (the clause engine all three planes share,
+        `merge_clauses`, computes the rewritten rows and the inserts,
+        cast to the table types; this method keeps the physical renames
+        and the snapshot commit): `on` references columns as t.<col> /
         s.<col>; only files containing matched rows rewrite, inserts
         append as new files, and multiple source rows matching one
         target row with an update clause raise. A source with columns
@@ -3126,29 +3082,22 @@ class IcebergMetadataReader:
         affected files — O(affected + inserts), never the table."""
         from lakehouses_spark.tables.delta_log import (
             merge_affected_files,
+            merge_clauses,
             merge_insert_required_check,
-            merge_inserts,
-            merge_rewritten,
             merge_source,
-            merge_widen,
             release_checkpoint,
         )
 
         pctx = self._partition_ctx("MERGE")
         live = self._live_data_entries()
         logical, ice, phys_of, fid_of_phys, dt_of_phys = self._phys_maps()
-        names = [f.name for f in logical.fields]
-        extra = [c for c in source.columns if c not in names]
+        extra = [f for f in source.schema.fields
+                 if f.name not in logical.names]
         if extra and not schema_evolution:
             raise IcebergFormatError(
-                f"MERGE source columns {extra} are not in the table "
-                "schema; pass schema_evolution=True to evolve it"
+                f"MERGE source columns {[f.name for f in extra]} are not in "
+                "the table schema; pass schema_evolution=True to evolve it"
             )
-        widen_dtype = {c: source.schema[c].dataType for c in extra}
-        names = names + extra
-
-        def widen(df: DataFrame) -> DataFrame:
-            return merge_widen(df, extra, widen_dtype)
 
         # one evaluation of the source feeds every leg; it and the insert
         # set's checkpoint are released once the MERGE commits or raises
@@ -3164,27 +3113,21 @@ class IcebergMetadataReader:
             plan = {"candidate_files": len(live),
                     "rewritten_files": len(affected),
                     "snapshot_id": self.meta.get("current-snapshot-id", -1)}
-            dtype_of = {
-                f.name: f.dataType for f in logical.fields} | widen_dtype
-            out_parts: list[DataFrame] = []
-            if affected:
-                # both rewrite-side reads list and scan ONLY the matched files
-                sub = widen(self.to_df(
-                    _with_path=True, _paths=set(affected))).alias("t")
-                out_parts.append(merge_rewritten(
-                    sub, src, cond, names, dtype_of, source.columns,
-                    when_matched_update, when_matched_delete,
-                ))
-            n_inserted = 0
             if when_not_matched_insert:
                 merge_insert_required_check(
                     logical.fields, source.columns, when_not_matched_insert,
                     IcebergFormatError)
-                ins = merge_inserts(
-                    src, self.to_df(_paths=affected).alias("t")
-                    if affected else None, cond, names, dtype_of,
-                    source.columns, when_not_matched_insert,
-                )
+            # the rewrite and the insert anti-join read ONLY the matched files
+            rewritten, ins, _ = merge_clauses(
+                self.to_df(_paths=affected) if affected else None, src, cond,
+                T.StructType(logical.fields + [
+                    T.StructField(f.name, f.dataType, True) for f in extra]),
+                when_matched_update, when_matched_delete,
+                when_not_matched_insert,
+            )
+            out_parts = [] if rewritten is None else [rewritten]
+            n_inserted = 0
+            if ins is not None:
                 # single-pass insert leg (VERDICT r11): the count
                 # materializes the anti-join (a lazy checkpoint: no job of
                 # its own); the COW write reads its blocks
@@ -3202,7 +3145,7 @@ class IcebergMetadataReader:
                 # metadata write); refresh the id/physical maps so the new
                 # columns get fresh field ids in bounds and manifests
                 self._schema_add_columns(
-                    [(c, widen_dtype[c]) for c in extra])
+                    [(f.name, f.dataType) for f in extra])
                 logical, ice, phys_of, fid_of_phys, dt_of_phys = \
                     self._phys_maps()
             new_rows = out_parts[0]
@@ -3217,29 +3160,9 @@ class IcebergMetadataReader:
             entries = self._added_entries(
                 new_rels, new_id, seq, fid_of_phys, dt_of_phys)
             n_added = len(entries)
-            n_deleted = 0
-            for e in live:
-                ap = str(self._local_data(
-                    e["data_file"]["file_path"]).resolve())
-                is_affected = ap in affected
-                n_deleted += is_affected
-                entries.append({
-                    "status": 2 if is_affected else 0,
-                    "snapshot_id": new_id if is_affected
-                    else e.get("snapshot_id"),
-                    "sequence_number": e.get("sequence_number"),
-                    "file_sequence_number": e.get("file_sequence_number"),
-                    "data_file": e["data_file"],
-                    "__spec_id": e.get("__spec_id"),
-                })
-            snap = self._snapshot()
-            carried = []
-            if snap is not None:
-                _, ml_rows = read_ocf_bytes(
-                    self._local(snap["manifest-list"]).read_bytes())
-                carried = [
-                    r for r in ml_rows if int(r.get("content", 0) or 0) == 1
-                ]
+            relisted, n_deleted, carried = self._relist_live(
+                live, new_id, affected)
+            entries += relisted
             self._commit_snapshot(
                 entries, ice, new_id, seq,
                 operation="overwrite",
@@ -3806,31 +3729,9 @@ class IcebergMetadataReader:
         entries = self._added_entries(
             new_rels, new_id, seq, fid_of_phys, dt_of_phys)
         n_added = len(entries)  # zero-row partitions were dropped
-        n_deleted = 0
-        for e in live:
-            ap = str(self._local_data(
-                e["data_file"]["file_path"]).resolve())
-            is_affected = ap in affected
-            n_deleted += is_affected
-            entries.append({
-                "status": 2 if is_affected else 0,  # DELETED / EXISTING
-                # spec: snapshot_id = snapshot that ADDED the file, or the
-                # one that DELETED it when status is 2
-                "snapshot_id": new_id if is_affected
-                else e.get("snapshot_id"),
-                "sequence_number": e.get("sequence_number"),
-                "file_sequence_number": e.get("file_sequence_number"),
-                "data_file": e["data_file"],
-                "__spec_id": e.get("__spec_id"),
-            })
-        # live delete manifests carry over: their position deletes
-        # target only paths (rewritten files' paths are gone — inert) and
-        # their equality deletes bind by sequence number (< the rewritten
-        # files' new seq — already applied in the rewrite)
-        snap = self._snapshot()
-        _, ml_rows = read_ocf_bytes(
-            self._local(snap["manifest-list"]).read_bytes())
-        carried = [r for r in ml_rows if int(r.get("content", 0) or 0) == 1]
+        relisted, n_deleted, carried = self._relist_live(
+            live, new_id, affected)
+        entries += relisted
         self._commit_snapshot(
             entries, ice, new_id, seq,
             operation="delete" if op == "DELETE" else "overwrite",

@@ -44,7 +44,9 @@ from pyspark.sql.types import (
 from lakehouses_spark.tables import log as txlog
 from lakehouses_spark.tables.delta_log import (
     collect_affected,
+    conform,
     merge_affected_files,
+    merge_clauses,
     merge_source,
 )
 from lakehouses_spark.tables.log import ConcurrentWriteError  # noqa: F401  (re-export)
@@ -828,7 +830,7 @@ class LakeTable:
         st = self.state()
         schema = StructType.fromJson(json.loads(st.schema_json))
         new_schema = _check_schema(schema, df.schema, merge_schema)
-        df = _conform(df, new_schema)
+        df = conform(df, new_schema)
         self._verify_constraints(df, st)
         adds = self._write_files(df, st.partition_by, state=st)
         for attempt in range(max_retries + 1):
@@ -877,7 +879,7 @@ class LakeTable:
         st = self.state()
         schema = StructType.fromJson(json.loads(st.schema_json))
         new_schema = _check_schema(schema, df.schema, merge_schema)
-        df = _conform(df, new_schema)
+        df = conform(df, new_schema)
         self._verify_constraints(df, st)
         adds = self._write_files(df, st.partition_by, state=st)
         self._commit(
@@ -1215,7 +1217,11 @@ class LakeTable:
         source (`delta_log.merge_affected_files`) finds the affected files
         and, when a matched row may update, raises
         MergeMultipleMatchesError where several source rows match one
-        target row, before anything is written.
+        target row, before anything is written. What the MERGE then writes
+        — the rewritten files, the inserts cast to the table types, the
+        CDF images — comes from the clause engine the three planes share
+        (`delta_log.merge_clauses`); this method keeps the file writes,
+        the commit and its ``txn_*`` stamp.
 
         ``source_unique_on_key=True`` asserts the source carries at most one
         row per merge key and drops the multiple-match count from the
@@ -1251,201 +1257,17 @@ class LakeTable:
                     err_cls=MergeMultipleMatchesError,
                 )]
 
-            adds: list[dict] = []
-            n_rewritten = 0
-            out_parts: list[DataFrame] = []
             cdf_on = self._cdf_enabled(st)
-            cdc_parts: list[tuple[DataFrame, str]] = []
-            # conditional delete: TRUE-only semantics (a NULL condition keeps
-            # the row), matching Delta's clause evaluation
-            dcond = (
-                F.expr(when_matched_delete).eqNullSafe(F.lit(True))
-                if isinstance(when_matched_delete, str)
-                else None
+            rewritten, ins, cdc_parts = merge_clauses(
+                self._snapshot(st, affected) if affected else None, src,
+                cond, schema, when_matched_update, when_matched_delete,
+                when_not_matched_insert, when_not_matched_insert_condition,
+                cdf=cdf_on,
             )
-            if affected:
-                t_aff = self._snapshot(st, affected).alias("t")
-                is_matched = F.col("s.__m__").isNotNull()
-                # matched rows being conditionally deleted drop out of the
-                # rewrite before any update clause applies; unmatched target
-                # rows (s.* NULL) never satisfy is_matched & dcond
-                drop_deleted = (
-                    (lambda df: df.where(~(is_matched & dcond)))
-                    if dcond is not None
-                    else (lambda df: df)
-                )
-                if when_matched_delete is True:
-                    rewritten = t_aff.join(src, cond, "left_anti").select(
-                        *[
-                            F.col(f"t.{c}").alias(c) if c in old_schema.names
-                            else F.lit(None).cast(schema[c].dataType).alias(c)
-                            for c in schema.names
-                        ]
-                    )
-                elif when_matched_update == "all":
-                    # UPDATE SET *: matched rows take source values VERBATIM —
-                    # a NULL in the source must overwrite a non-NULL target
-                    # (coalesce would not), so gate on an explicit matched flag.
-                    def matched_col(c: str):
-                        in_src = c in source.columns
-                        in_tgt = c in old_schema.names
-                        if in_src and in_tgt:
-                            return (
-                                F.when(is_matched, F.col(f"s.{c}"))
-                                .otherwise(F.col(f"t.{c}"))
-                                .alias(c)
-                            )
-                        if in_src:  # evolved column: only the source has it
-                            return F.col(f"s.{c}").alias(c)
-                        return F.col(f"t.{c}").alias(c)
-
-                    rewritten = drop_deleted(
-                        t_aff.join(
-                            src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left"
-                        )
-                    ).select(*[matched_col(c) for c in schema.names])
-                elif when_matched_update:
-                    marked = drop_deleted(
-                        t_aff.join(
-                            src.withColumn("__m__", F.lit(1)).alias("s"), cond, "left"
-                        )
-                    )
-                    rewritten = marked.select(
-                        *[
-                            F.when(is_matched, F.expr(when_matched_update[c]).cast(schema[c].dataType))
-                            .otherwise(F.col(f"t.{c}"))
-                            .alias(c)
-                            if c in when_matched_update
-                            else F.col(f"t.{c}").alias(c)
-                            for c in schema.names
-                        ]
-                    )
-                elif dcond is not None:
-                    # delete-only conditional clause: anti-join on cond AND the
-                    # delete condition — keeps every target row no source row
-                    # deletes, and (unlike a left join + filter) never duplicates
-                    # a target row matched by several source rows
-                    rewritten = t_aff.join(
-                        src.withColumn("__m__", F.lit(1)).alias("s"),
-                        cond & dcond, "left_anti"
-                    ).select(
-                        *[
-                            F.col(f"t.{c}").alias(c) if c in old_schema.names
-                            else F.lit(None).cast(schema[c].dataType).alias(c)
-                            for c in schema.names
-                        ]
-                    )
-                else:
-                    rewritten = t_aff.select(
-                        *[
-                            F.col(f"t.{c}").alias(c) if c in old_schema.names
-                            else F.lit(None).cast(schema[c].dataType).alias(c)
-                            for c in schema.names
-                        ]
-                    )
-                if cdf_on:
-                    # matched-row change images (CDF): pre = target rows the
-                    # source matched; post = those rows with the clause applied
-                    t_cdf = self._snapshot(st, affected).alias("t")
-                    pre = _conform(t_cdf.join(src, cond, "left_semi"), schema)
-                    if dcond is not None:
-                        # conditional clauses: deleted rows = semi-join on
-                        # cond AND dcond (each once, like the rewrite); the
-                        # update images cover only the matched-not-deleted rows
-                        del_pre = _conform(
-                            t_cdf.join(
-                                src.withColumn("__m__", F.lit(1)).alias("s"),
-                                cond & dcond, "left_semi"),
-                            schema)
-                        cdc_parts.append((del_pre, "delete"))
-                        if when_matched_update:
-                            surv = t_cdf.join(
-                                src.withColumn("__m__", F.lit(1)).alias("s"),
-                                cond, "inner").where(~dcond)
-                            upd_pre = surv.select(
-                                *[F.col(f"t.{c}").alias(c)
-                                  if c in old_schema.names
-                                  else F.lit(None)
-                                  .cast(schema[c].dataType).alias(c)
-                                  for c in schema.names])
-                            if when_matched_update == "all":
-                                post = surv.select(
-                                    *[(F.col(f"s.{c}") if c in source.columns
-                                       else F.col(f"t.{c}")).alias(c)
-                                      for c in schema.names])
-                            else:
-                                post = surv.select(
-                                    *[F.expr(when_matched_update[c])
-                                      .cast(schema[c].dataType).alias(c)
-                                      if c in when_matched_update
-                                      else (F.col(f"t.{c}").alias(c)
-                                            if c in old_schema.names
-                                            else F.lit(None)
-                                            .cast(schema[c].dataType).alias(c))
-                                      for c in schema.names])
-                            cdc_parts += [(upd_pre, "update_preimage"),
-                                          (post, "update_postimage")]
-                    elif when_matched_delete:
-                        cdc_parts.append((pre, "delete"))
-                    elif when_matched_update == "all":
-                        post = t_cdf.join(src, cond, "inner").select(
-                            *[(F.col(f"s.{c}") if c in source.columns
-                               else F.col(f"t.{c}")).alias(c)
-                              for c in schema.names])
-                        cdc_parts += [(pre, "update_preimage"),
-                                      (post, "update_postimage")]
-                    elif when_matched_update:
-                        post = t_cdf.join(src, cond, "inner").select(
-                            *[F.expr(when_matched_update[c])
-                              .cast(schema[c].dataType).alias(c)
-                              if c in when_matched_update
-                              else (F.col(f"t.{c}").alias(c)
-                                    if c in old_schema.names
-                                    else F.lit(None)
-                                    .cast(schema[c].dataType).alias(c))
-                              for c in schema.names])
-                        cdc_parts += [(pre, "update_preimage"),
-                                      (post, "update_postimage")]
-                out_parts.append(rewritten)
-                n_rewritten = len(affected)
-
-            if when_not_matched_insert:
-                if paths and affected:
-                    # (r13) anti-join against the AFFECTED files only, not the
-                    # whole table: any target row matching a source row lives in
-                    # an affected file by construction (affected = files with at
-                    # least one semi-join hit), so the unmatched-source set is
-                    # identical and the insert leg stops re-scanning the table.
-                    t_all = self._snapshot(st, affected).alias("t")
-                    inserts = src.join(t_all, cond, "left_anti")
-                else:
-                    # no live files, or no file holds any matched row — every
-                    # source row is unmatched by construction, so the anti-join
-                    # (against an empty, stats-less frame it would sort-merge)
-                    # drops out entirely
-                    inserts = src
-                if when_not_matched_insert_condition:
-                    # Delta's whenNotMatchedInsert(condition=...): evaluated on
-                    # the unmatched source row, TRUE-only semantics
-                    inserts = inserts.where(
-                        F.expr(when_not_matched_insert_condition)
-                        .eqNullSafe(F.lit(True))
-                    )
-                if when_not_matched_insert == "all":
-                    ins = _conform(inserts, schema)
-                else:
-                    ins = inserts.select(
-                        *[
-                            F.expr(when_not_matched_insert[c]).cast(schema[c].dataType).alias(c)
-                            if c in when_not_matched_insert
-                            else F.lit(None).cast(schema[c].dataType).alias(c)
-                            for c in schema.names
-                        ]
-                    )
-                if cdf_on:
-                    cdc_parts.append((ins, "insert"))
-                out_parts.append(ins)
-
+            if cdf_on and ins is not None:
+                cdc_parts.append((ins, "insert"))
+            out_parts = [p for p in (rewritten, ins) if p is not None]
+            adds: list[dict] = []
             if out_parts:
                 out = out_parts[0]
                 for p in out_parts[1:]:
@@ -1471,7 +1293,7 @@ class LakeTable:
                 schema=schema.json() if schema != old_schema else None,
                 cdc=cdc,
             )
-            return {"rewritten_files": n_rewritten, "added_files": len(adds)}
+            return {"rewritten_files": len(affected), "added_files": len(adds)}
 
     # ------------------------------------------------------------------ #
     # ALTER TABLE surface (D9) + CHECK constraints
@@ -2191,14 +2013,3 @@ def _check_schema(table: StructType, incoming: StructType, merge: bool) -> Struc
     if not new:
         return table
     return StructType(table.fields + new)
-
-
-def _conform(df: DataFrame, schema: StructType) -> DataFrame:
-    """Project df to the table schema, nulling absent columns."""
-    return df.select(
-        *[
-            F.col(f.name).cast(f.dataType) if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )

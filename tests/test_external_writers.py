@@ -638,10 +638,10 @@ def test_merge_insert_anti_join_executes_once(spark, tmp_path, monkeypatch):
     import lakehouses_spark.tables.delta_log as dl
 
     acc = spark.sparkContext.accumulator(0)
-    real = dl.merge_inserts
+    real = dl.merge_clauses
 
     def counted(*a, **k):
-        out = real(*a, **k)
+        rewritten, out, images = real(*a, **k)
 
         def bump(x):
             acc.add(1)
@@ -649,9 +649,10 @@ def test_merge_insert_anti_join_executes_once(spark, tmp_path, monkeypatch):
 
         from pyspark.sql.types import LongType
         u = F.udf(bump, LongType()).asNondeterministic()
-        return out.withColumn(out.columns[0], u(F.col(out.columns[0])))
+        return rewritten, out.withColumn(
+            out.columns[0], u(F.col(out.columns[0]))), images
 
-    monkeypatch.setattr(dl, "merge_inserts", counted)
+    monkeypatch.setattr(dl, "merge_clauses", counted)
     df = spark.createDataFrame(ROWS, SCHEMA).coalesce(1)
     r = write_delta_table(
         spark, df, tmp_path / "d",
@@ -665,7 +666,7 @@ def test_merge_insert_anti_join_executes_once(spark, tmp_path, monkeypatch):
     acc2 = spark.sparkContext.accumulator(0)
 
     def counted2(*a, **k):
-        out = real(*a, **k)
+        rewritten, out, images = real(*a, **k)
 
         def bump(x):
             acc2.add(1)
@@ -673,9 +674,10 @@ def test_merge_insert_anti_join_executes_once(spark, tmp_path, monkeypatch):
 
         from pyspark.sql.types import LongType
         u = F.udf(bump, LongType()).asNondeterministic()
-        return out.withColumn(out.columns[0], u(F.col(out.columns[0])))
+        return rewritten, out.withColumn(
+            out.columns[0], u(F.col(out.columns[0]))), images
 
-    monkeypatch.setattr(dl, "merge_inserts", counted2)
+    monkeypatch.setattr(dl, "merge_clauses", counted2)
     ri = write_iceberg_table(spark, df, tmp_path / "i")
     res = ri.merge(src, "t.k = s.k")
     assert res["inserted_rows"] == 3

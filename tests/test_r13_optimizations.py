@@ -286,11 +286,12 @@ PLANES = ["lake", "delta", "iceberg"]
 TARGET = [(k, f"v{k}") for k in range(20)]
 
 
-def _plane_table(spark, plane, path):
+def _plane_table(spark, plane, path, df=None):
     from lakehouses_spark.tables.delta_log import write_delta_table
     from lakehouses_spark.tables.iceberg_meta import write_iceberg_table
 
-    df = spark.createDataFrame(TARGET, "k long, v string")
+    if df is None:
+        df = spark.createDataFrame(TARGET, "k long, v string")
     if plane == "lake":
         return LakeTable.create(spark, path, df)
     if plane == "delta":
@@ -312,7 +313,7 @@ def _plane_state(spark, plane, path):
     else:
         t = IcebergMetadataReader(spark, path)
         version, df = t.meta["current-snapshot-id"], t.to_df()
-    return version, sorted((r.k, r.v) for r in df.collect())
+    return version, sorted(tuple(r) for r in df.collect())
 
 
 def _stored_rdds(spark):
@@ -413,3 +414,57 @@ def test_multimatch_on_a_deleted_row_does_not_raise(spark, tmp_path):
             "t.k = s.k")
     rows = _plane_state(spark, "lake", tmp_path / "lake")[1]
     assert [r for r in rows if r[0] == 3] == [(3, "x"), (3, "x")]
+
+
+# -------------------------------------------------------------------------
+# MERGE clauses shared by the three write planes (`merge_clauses`)
+# -------------------------------------------------------------------------
+@pytest.mark.parametrize("plane", PLANES)
+def test_evolving_merge_with_a_dict_update(spark, tmp_path, plane):
+    """A schema-evolving MERGE whose SET clause omits the new column:
+    matched and untouched target rows read NULL in it, inserted rows take
+    the source's value — the same rows on every plane (the target is
+    widened before the clauses apply)."""
+    path = tmp_path / plane
+    t = _plane_table(spark, plane, path)
+    src = spark.createDataFrame(
+        [(k, f"s{k}", f"w{k}") for k in range(15, 25)],
+        "k long, v string, w string")
+    evolve = {"merge_schema": True} if plane == "lake" else {
+        "schema_evolution": True}
+    t.merge(src, "t.k = s.k", when_matched_update={"v": "s.v"}, **evolve)
+    assert _plane_state(spark, plane, path)[1] == sorted(
+        [(k, f"v{k}", None) for k in range(15)]
+        + [(k, f"s{k}", None) for k in range(15, 20)]
+        + [(k, f"s{k}", f"w{k}") for k in range(20, 25)])
+
+
+@pytest.mark.parametrize("plane", PLANES)
+@pytest.mark.parametrize("table_ddl, source_ddl, keys", [
+    # INSERT * from a narrower source, no key matching: inserts cast up
+    ("k long, v long", "k int, v int", range(100, 105)),
+    # UPDATE * from a wider source, every key matching: values cast down
+    ("k long, v int", "k long, v long", range(5)),
+], ids=["insert_narrower", "update_wider"])
+def test_merge_writes_the_table_types(spark, tmp_path, plane, table_ddl,
+                                      source_ddl, keys):
+    """The data files a MERGE writes carry the table's column types
+    whatever the source's types, and the table reads back."""
+    import pyarrow.parquet as pq
+
+    path = tmp_path / plane
+    t = _plane_table(spark, plane, path, spark.createDataFrame(
+        [(k, k) for k in range(10)], table_ddl))
+    before = set(path.rglob("*.parquet"))
+    t.merge(spark.createDataFrame([(k, -k) for k in keys], source_ddl),
+            "t.k = s.k")
+    written = [f for f in set(path.rglob("*.parquet")) - before
+               if "_change_data" not in f.parts]
+    want = {"long": "int64", "int": "int32"}
+    assert written
+    for f in written:
+        footer = pq.read_schema(f)
+        assert [str(footer.field(c).type) for c in ("k", "v")] == [
+            want[d.split()[1]] for d in table_ddl.split(", ")]
+    rows = {k: k for k in range(10)} | {k: -k for k in keys}
+    assert _plane_state(spark, plane, path)[1] == sorted(rows.items())
